@@ -290,6 +290,24 @@ def polyfill_part(
     return cells, full
 
 
+def polyfill_parts(parts: list, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Cover of a (multi)polygon at ``res``: (sorted cells, full), where
+    full marks cells no ring boundary of any part crosses and some part
+    covers — the classification both the cover join and the tile cut use.
+    """
+    per_part = [polyfill_part(p_, res, classify=True) for p_ in parts]
+    cells = np.unique(np.concatenate([c for c, _ in per_part]))
+    # full in the union if full in any part (multipolygon parts may overlap
+    # a cell another part only touches)...
+    full = np.zeros(len(cells), dtype=bool)
+    for c, f in per_part:
+        full |= np.isin(cells, c[f])
+    # ...but never full if any part's boundary crosses it
+    for c, f in per_part:
+        full &= ~np.isin(cells, c[~f])
+    return cells, full
+
+
 def compact(ids: np.ndarray) -> np.ndarray:
     """Minimal mixed-resolution set covering the same area (H3 compact).
 

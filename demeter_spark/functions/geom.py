@@ -162,12 +162,19 @@ def points_in_packed_grouped(
     group_ids: np.ndarray,
     packed: np.ndarray,
     cell_ids: np.ndarray | None = None,
+    starts: np.ndarray | None = None,
 ) -> np.ndarray:
     """PIP for candidate pairs whose geometry rides the rows: ``packed[i]``
     is the pack_polygons-encoded geometry for point i's candidate parcel —
     CLIPPED to the candidate's cover cell, so the group key is
     (group_ids, cell_ids): every row in one group shares one packed value,
     decoded once.
+
+    Two input layouts: an object array of per-row packed arrays (None = no
+    geometry), or, with ``starts``, the Arrow layout of a ``list<double>``
+    column — ``packed`` is the flat values buffer and row i's geometry
+    begins at ``packed[starts[i]]`` (the packed layout is self-delimiting,
+    so no end offset is needed; every row must carry geometry).
 
     This is the distributed-refine kernel: no dict of all polygons exists
     anywhere; each Arrow batch carries exactly the geometry it tests.
@@ -194,8 +201,8 @@ def points_in_packed_grouped(
     sorted_cell = cell_ids[order]
     changed = (np.diff(sorted_gid) != 0) | (np.diff(sorted_cell) != 0)
     boundaries = np.flatnonzero(changed) + 1
-    starts = np.concatenate([[0], boundaries])
-    ends = np.concatenate([boundaries, [n]])
+    g_lo = np.concatenate([[0], boundaries])
+    g_hi = np.concatenate([boundaries, [n]])
 
     ex0: list[np.ndarray] = []  # edge start/end coordinate store
     ey0: list[np.ndarray] = []
@@ -207,12 +214,15 @@ def points_in_packed_grouped(
     rp_row: list[np.ndarray] = []  # parity bucket -> point row
     n_edges = 0
     n_rp = 0
-    for s, e in zip(starts, ends):
+    for s, e in zip(g_lo, g_hi):
         idx = order[s:e]
-        flat = packed[idx[0]]
-        if flat is None:
-            continue
-        arr = np.asarray(flat, dtype=np.float64)
+        if starts is None:
+            flat = packed[idx[0]]
+            if flat is None:
+                continue
+            arr = np.asarray(flat, dtype=np.float64)
+        else:
+            arr = packed[starts[idx[0]]:]
         pos = 1
         for _ in range(int(arr[0])):  # parts: even-odd within, OR across
             part_ne = 0
@@ -508,42 +518,70 @@ def touched_grid_boxes(
 
 
 def _clip_halfplane(
-    xs: np.ndarray, ys: np.ndarray, coord: int, bound: float, keep_le: bool
-) -> Ring:
-    """One Sutherland-Hodgman pass: clip ring against axis-aligned half-plane
-    (coord 0 = x, 1 = y; keep values <= bound if keep_le else >= bound).
-    Vectorized: per-edge emissions assembled with repeat/cumsum indexing."""
-    if len(xs) == 0:
-        return xs, ys
+    xs: np.ndarray, ys: np.ndarray, off: np.ndarray,
+    bound: np.ndarray, coord: int, keep_le: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One Sutherland-Hodgman pass over many rings at once: ring s is
+    ``xs[off[s]:off[s + 1]]`` and is clipped against its own axis-aligned
+    half-plane ``bound[s]`` (coord 0 = x, 1 = y; keep values <= bound if
+    keep_le else >= bound). Returns the clipped rings in the same layout.
+
+    Segment-vectorized: successor indices wrap within each ring, and each
+    edge emits [intersection if crossing] + [next vertex if next inside] at
+    slots given by one cumsum over the per-edge counts, so every ring's
+    output stays contiguous and in order. Per element the arithmetic is the
+    single-ring pass's, so results do not depend on how rings are batched.
+    """
+    n = len(xs)
+    if n == 0:
+        return xs, ys, off
+    lens = np.diff(off)
+    b = np.repeat(bound, lens)
     v = xs if coord == 0 else ys
-    inside = (v <= bound) if keep_le else (v >= bound)
-    nxt = np.arange(1, len(xs) + 1) % len(xs)
+    inside = (v <= b) if keep_le else (v >= b)
+    nxt = np.arange(1, n + 1)
+    nonempty = lens > 0
+    nxt[off[1:][nonempty] - 1] = off[:-1][nonempty]
     in_n = inside[nxt]
     crossing = inside != in_n
-    # intersection of each edge with the boundary line
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(crossing, (bound - v) / (v[nxt] - v), 0.0)
+    # intersection of each crossing edge with the boundary line; its
+    # endpoints lie on opposite sides of the bound, so the denominator is
+    # nonzero and |t| <= 1 (dividing on every edge overflows on near-equal
+    # ordinates of edges that do not cross)
+    vn = v[nxt]
+    t = np.zeros(n)
+    t[crossing] = (b[crossing] - v[crossing]) / (vn[crossing] - v[crossing])
     cx = xs + t * (xs[nxt] - xs)
     cy = ys + t * (ys[nxt] - ys)
     if coord == 0:
-        cx = np.where(crossing, bound, cx)  # exact on the clip line
+        cx[crossing] = b[crossing]  # exact on the clip line
     else:
-        cy = np.where(crossing, bound, cy)
-    # per edge: [intersection if crossing] + [next vertex if next inside]
-    counts = crossing.astype(np.int64) + in_n.astype(np.int64)
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0), np.empty(0)
+        cy[crossing] = b[crossing]
+    counts = crossing.astype(np.int64) + in_n
+    csum = np.concatenate([[0], np.cumsum(counts)])
+    total = int(csum[-1])
     out_x = np.empty(total)
     out_y = np.empty(total)
-    start = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    start = csum[:-1]
     put_cross = start[crossing]
     out_x[put_cross] = cx[crossing]
     out_y[put_cross] = cy[crossing]
-    put_next = start[in_n] + crossing[in_n].astype(np.int64)
+    put_next = start[in_n] + crossing[in_n]
     out_x[put_next] = xs[nxt][in_n]
     out_y[put_next] = ys[nxt][in_n]
-    return out_x, out_y
+    return out_x, out_y, csum[off]
+
+
+def _clip_rings_to_boxes(
+    xs: np.ndarray, ys: np.ndarray, off: np.ndarray,
+    x0: np.ndarray, y0: np.ndarray, x1: np.ndarray, y1: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Clip ring s (``xs[off[s]:off[s + 1]]``) to box s, all rings in four
+    segment-vectorized half-plane passes."""
+    xs, ys, off = _clip_halfplane(xs, ys, off, x1, 0, True)
+    xs, ys, off = _clip_halfplane(xs, ys, off, x0, 0, False)
+    xs, ys, off = _clip_halfplane(xs, ys, off, y1, 1, True)
+    return _clip_halfplane(xs, ys, off, y0, 1, False)
 
 
 def clip_ring_box(
@@ -556,58 +594,159 @@ def clip_ring_box(
     stays exact for points strictly inside the box)."""
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    xs, ys = _clip_halfplane(xs, ys, 0, x1, True)
-    xs, ys = _clip_halfplane(xs, ys, 0, x0, False)
-    xs, ys = _clip_halfplane(xs, ys, 1, y1, True)
-    xs, ys = _clip_halfplane(xs, ys, 1, y0, False)
-    return xs, ys
+    box = [np.array([c], dtype=np.float64) for c in (x0, y0, x1, y1)]
+    cx, cy, _ = _clip_rings_to_boxes(
+        xs, ys, np.array([0, len(xs)]), *box
+    )
+    return cx, cy
 
 
 def parts_bboxes(parts: list[list[Ring]]) -> list[list[tuple]]:
-    """Per-ring bboxes, computed ONCE per polygon so per-cell clipping can
-    prescreen rings in O(1) instead of touching all vertices."""
+    """Per-ring bboxes, computed ONCE per polygon so clipping can prescreen
+    (ring, box) pairs without touching vertices."""
     return [[ring_bbox(xs, ys) for xs, ys in rings] for rings in parts]
+
+
+# soft cap on the vertices one clip batch replicates across its boxes: a
+# ring is copied once per box its bbox overlaps, so a many-vertex polygon
+# with many boundary cells is clipped in box chunks of bounded memory
+_CLIP_BATCH_VERTICES = 1 << 20
+
+
+def clip_parts_to_boxes(
+    parts: list[list[Ring]],
+    bboxes: list[list[tuple]],
+    x0: np.ndarray, y0: np.ndarray, x1: np.ndarray, y1: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Clip a (multi)polygon to each of B boxes, ring by ring, in batched
+    passes: returns ``(values, offsets)`` where box b's clipped geometry is
+    ``values[offsets[b]:offsets[b + 1]]`` in pack_polygons layout — the flat
+    buffer + offsets of an Arrow ``list<double>`` column.
+
+    Even-odd parity w.r.t. the clipped rings equals parity w.r.t. the
+    originals for any point strictly inside a box, so PIP semantics are
+    preserved per box. ``bboxes`` (parts_bboxes) prescreens (ring, box)
+    pairs: a ring whose bbox is disjoint from the box has parity 0 there and
+    costs no vertex work. A ring that clips to fewer than 3 vertices either
+    misses the box or CONTAINS it (parity 1 everywhere — e.g. the outer ring
+    of a part whose hole crosses the box): it is kept as the box itself iff
+    the ring's bbox contains the box and the ring contains the box centre.
+    Parts left with no ring are dropped; a box with none packs as [0.0].
+    """
+    x0, y0, x1, y1 = (np.asarray(a, dtype=np.float64) for a in (x0, y0, x1, y1))
+    rings = [r for rs in parts for r in rs]
+    ring_part = np.array(
+        [pi for pi, rs in enumerate(parts) for _ in rs], dtype=np.int64
+    )
+    rb = np.array([bb for bbs in bboxes for bb in bbs], dtype=np.float64)
+    rb = rb.reshape(len(rings), 4)
+    rlen = np.array([len(xs) for xs, _ in rings], dtype=np.int64)
+    rstart = np.concatenate([[0], np.cumsum(rlen)[:-1]]).astype(np.int64)
+    rx = np.concatenate([np.asarray(xs, dtype=np.float64) for xs, _ in rings])
+    ry = np.concatenate([np.asarray(ys, dtype=np.float64) for _, ys in rings])
+    # (box, ring) relations, rings in (part, ring) order
+    overlap = ~(
+        (rb[None, :, 2] < x0[:, None]) | (rb[None, :, 0] > x1[:, None])
+        | (rb[None, :, 3] < y0[:, None]) | (rb[None, :, 1] > y1[:, None])
+    )
+    contains = (
+        (rb[None, :, 0] <= x0[:, None]) & (rb[None, :, 1] <= y0[:, None])
+        & (rb[None, :, 2] >= x1[:, None]) & (rb[None, :, 3] >= y1[:, None])
+    )
+    # box chunks holding at most ~_CLIP_BATCH_VERTICES replicated vertices
+    # (a single box above the cap forms its own chunk)
+    work = np.cumsum(overlap @ rlen)
+    cuts = [0]
+    while cuts[-1] < len(x0):
+        base = work[cuts[-1] - 1] if cuts[-1] else 0
+        nxt = int(np.searchsorted(work, base + _CLIP_BATCH_VERTICES, "right"))
+        cuts.append(max(nxt, cuts[-1] + 1))
+    values: list[np.ndarray] = []
+    offsets: list[np.ndarray] = [np.zeros(1, dtype=np.int64)]
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        v, o = _clip_box_chunk(
+            rx, ry, rstart, rlen, ring_part,
+            overlap[lo:hi], contains[lo:hi],
+            x0[lo:hi], y0[lo:hi], x1[lo:hi], y1[lo:hi],
+        )
+        values.append(v)
+        offsets.append(o[1:] + offsets[-1][-1])
+    return np.concatenate(values or [np.empty(0)]), np.concatenate(offsets)
+
+
+def _clip_box_chunk(rx, ry, rstart, rlen, ring_part, overlap, contains,
+                    x0, y0, x1, y1):
+    """clip_parts_to_boxes for one chunk of boxes: (values, offsets)."""
+    nb = len(x0)
+    pb, pr = np.nonzero(overlap)  # pairs in (box, ring) order
+    plen = rlen[pr]
+    off = np.concatenate([[0], np.cumsum(plen)]).astype(np.int64)
+    src = np.repeat(rstart[pr] - off[:-1], plen) + np.arange(off[-1])
+    cxs, cys, coff = _clip_rings_to_boxes(
+        rx[src], ry[src], off, x0[pb], y0[pb], x1[pb], y1[pb]
+    )
+    n = np.diff(coff)
+    clipped = n >= 3
+    # empty-clip fallback: one points_in_ring call per ring over the centres
+    # of the boxes its bbox contains
+    as_box = np.zeros(len(pb), dtype=bool)
+    cand = ~clipped & contains[pb, pr]
+    for r in np.unique(pr[cand]):
+        sel = np.flatnonzero(cand & (pr == r))
+        b = pb[sel]
+        s, m = rstart[r], rlen[r]
+        as_box[sel] = points_in_ring(
+            (x0[b] + x1[b]) * 0.5, (y0[b] + y1[b]) * 0.5,
+            rx[s:s + m], ry[s:s + m],
+        )
+    # pack: per box [n_parts, per kept part: n_rings, per kept ring: n, xs, ys]
+    ln = np.where(clipped, n, np.where(as_box, 4, 0))
+    kept = np.flatnonzero(ln > 0)
+    kb = pb[kept]
+    kpart = ring_part[pr[kept]]
+    kl = ln[kept]
+    new_part = np.ones(len(kept), dtype=bool)
+    new_part[1:] = (kb[1:] != kb[:-1]) | (kpart[1:] != kpart[:-1])
+    item = 1 + 2 * kl + new_part  # [part header] + ring block
+    box_size = 1 + np.bincount(kb, weights=item, minlength=nb).astype(np.int64)
+    offsets = np.concatenate([[0], np.cumsum(box_size)]).astype(np.int64)
+    values = np.empty(int(offsets[-1]))
+    # item i starts after every earlier item and one header per box so far
+    pos = np.concatenate([[0], np.cumsum(item)[:-1]]).astype(np.int64) + kb + 1
+    values[offsets[:-1]] = np.bincount(kb[new_part], minlength=nb)
+    part_id = np.cumsum(new_part) - 1
+    values[pos[new_part]] = np.bincount(part_id)
+    hdr = pos + new_part
+    values[hdr] = kl
+    # clipped vertices of kept rings, then box corners of fallback rings
+    ring_of = np.full(len(pb), -1, dtype=np.int64)
+    ring_of[kept] = np.arange(len(kept))
+    vert_ring = np.repeat(ring_of, n)
+    take = vert_ring >= 0
+    take[take] = clipped[kept][vert_ring[take]]
+    vr = vert_ring[take]
+    local = np.arange(len(cxs))[take] - coff[:-1][kept][vr]
+    dst = hdr[vr] + 1 + local
+    values[dst] = cxs[take]
+    values[dst + kl[vr]] = cys[take]
+    fb = np.flatnonzero(as_box[kept])
+    if len(fb):
+        b = kb[fb]
+        dst = hdr[fb][:, None] + 1 + np.arange(4)
+        values[dst] = np.stack([x0[b], x1[b], x1[b], x0[b]], axis=1)
+        values[dst + 4] = np.stack([y0[b], y0[b], y1[b], y1[b]], axis=1)
+    return values, offsets
 
 
 def clip_parts_to_box(
     parts: list[list[Ring]],
     x0: float, y0: float, x1: float, y1: float,
-    bboxes: list[list[tuple]] | None = None,
 ) -> list[list[Ring]]:
-    """Clip a (multi)polygon to a box, ring by ring. Even-odd parity w.r.t.
-    the clipped rings equals parity w.r.t. the originals for any point
-    strictly inside the box, so PIP semantics are preserved per cell.
-
-    A ring that clips to nothing either misses the box entirely (parity 0 —
-    dropped) or CONTAINS the whole box (parity 1 everywhere — e.g. the outer
-    ring of a part whose hole crosses this cell): represented by the box
-    itself so downstream parity stays correct."""
-    box = (
-        np.array([x0, x1, x1, x0]),
-        np.array([y0, y0, y1, y1]),
+    """clip_parts_to_boxes for one box, as parts of rings."""
+    values, _ = clip_parts_to_boxes(
+        parts, parts_bboxes(parts), [x0], [y0], [x1], [y1]
     )
-    cx = np.array([(x0 + x1) * 0.5])
-    cy = np.array([(y0 + y1) * 0.5])
-    out: list[list[Ring]] = []
-    for pi, rings in enumerate(parts):
-        kept: list[Ring] = []
-        for ri, (xs, ys) in enumerate(rings):
-            may_contain = True
-            if bboxes is not None:
-                bx0, by0, bx1, by1 = bboxes[pi][ri]
-                if bx1 < x0 or bx0 > x1 or by1 < y0 or by0 > y1:
-                    continue  # bbox disjoint: parity 0, zero vertex work
-                may_contain = bx0 <= x0 and by0 <= y0 and bx1 >= x1 and by1 >= y1
-            c = clip_ring_box(xs, ys, x0, y0, x1, y1)
-            if len(c[0]) >= 3:
-                kept.append(c)
-            elif may_contain and points_in_ring(
-                cx, cy, np.asarray(xs), np.asarray(ys)
-            )[0]:
-                kept.append(box)
-        if kept:
-            out.append(kept)
-    return out
+    return unpack_polygons(values)
 
 
 def pack_polygons(parts: list[list[Ring]]) -> np.ndarray:

@@ -11,11 +11,13 @@ Here the same filter-refine pattern is Spark-native:
 2. points -> cell id at R (one vectorized UDF);
 3. **equi-join on cell id** — plain Catalyst join, so broadcast/SMJ selection,
    AQE skew-splitting and partition pruning all apply unmodified;
-4. exact PIP refine in a vectorized pandas UDF. Geometry travels WITH the
-   data: boundary cover rows carry the parcel's packed ring coordinates as an
-   ``array<double>`` column, so the refine reads per-batch geometry — no
-   driver-side collect/broadcast of the polygon dimension anywhere. Interior
-   (fully-covered) cells carry NULL geometry and skip the kernel entirely.
+4. exact PIP refine in an ``arrow_udf`` over flat ring buffers. Geometry
+   travels WITH the data: boundary cover rows carry the parcel's ring
+   coordinates, clipped to the cell in one batched pass per polygon, as an
+   ``array<double>`` column, and the refine reads each batch's geometry as
+   one Arrow values buffer plus offsets — no driver-side collect/broadcast
+   of the polygon dimension anywhere. Interior (fully-covered) cells carry
+   NULL geometry and skip the kernel entirely.
 
 Scale posture: the polygon dimension may exceed driver memory (continental
 parcel sets); every stage here is executor-side and keyed, so the build side
@@ -29,7 +31,7 @@ chain (res R .. R_min) and joins on any level.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
@@ -45,86 +47,78 @@ def parcel_covers(
     parcels: DataFrame,
     res: int = DEFAULT_RES,
     compact: bool = False,
-    with_rings: bool = True,
 ) -> DataFrame:
     """(parcel_id, geom_wkt) -> exploded (parcel_id, cell, full, rings) cover.
 
-    Runs as mapInPandas over the polygon dimension: per-polygon WKT parse +
-    vectorized polyfill. Polygon count is the *dimension* cardinality (small
-    relative to pages), and each polygon's fill is a numpy kernel.
+    Runs as mapInArrow over the polygon dimension: per-polygon WKT parse,
+    vectorized polyfill, and one batched clip of the polygon to all of its
+    boundary cells (geom.clip_parts_to_boxes). Polygon count is the
+    *dimension* cardinality (small relative to pages).
 
-    ``with_rings``: boundary cells (full=false) carry the parcel's packed
-    ring coordinates (geom.pack_polygons layout) so the downstream PIP refine
-    never needs the polygon dimension on the driver; interior cells carry
-    NULL (they need no refinement). Disable to get the narrow 3-column cover
-    for plan-shape tests / bucketed storage.
+    Boundary cells (full=false) carry the parcel's ring coordinates CLIPPED
+    to the cell box + epsilon, in geom.pack_polygons layout, so the
+    downstream PIP refine never needs the polygon dimension on the driver,
+    and a cover row carries only the handful of vertices that cross its own
+    cell: Arrow transfer and PIP cost per candidate are O(local boundary),
+    independent of the parcel's total vertex count. The epsilon expansion
+    keeps points that sit exactly ON a cell edge strictly interior to the
+    clip box (parity stays exact). Interior cells carry NULL (they need no
+    refinement). The rings column is built straight from the clip's flat
+    values + offsets — no per-row objects.
     """
 
     def _covers(batches):
-        for pdf in batches:
-            ids: list[int] = []
+        for batch in batches:
+            ids: list[np.ndarray] = []
             cells: list[np.ndarray] = []
             fulls: list[np.ndarray] = []
-            rings: list = []
-            for pid, wkt in zip(pdf["parcel_id"], pdf["geom_wkt"]):
+            lens: list[np.ndarray] = []
+            values: list[np.ndarray] = []
+            for pid, wkt in zip(
+                batch.column("parcel_id").to_pylist(),
+                batch.column("geom_wkt").to_pylist(),
+            ):
                 parts = geom.parse_wkt_polygons(wkt)
-                per_ring = [cg.polyfill_part(p_, res, classify=True) for p_ in parts]
-                cs = np.unique(np.concatenate([c for c, _ in per_ring]))
-                # full in the union if full in any part (multipolygon parts
-                # may overlap a cell another part only touches)
-                full = np.zeros(len(cs), dtype=bool)
-                for c, f in per_ring:
-                    full |= np.isin(cs, c[f])
-                # ...but never full if any part's boundary crosses it
-                for c, f in per_ring:
-                    full &= ~np.isin(cs, c[~f])
+                cs, full = cg.polyfill_parts(parts, res)
+                bnd = cs[~full]
+                bx0, by0, bx1, by1 = cg.cell_bounds(bnd)
+                ex = (bx1 - bx0) * 1e-9
+                ey = (by1 - by0) * 1e-9
+                vals, offs = geom.clip_parts_to_boxes(
+                    parts, geom.parts_bboxes(parts),
+                    bx0 - ex, by0 - ey, bx1 + ex, by1 + ey,
+                )
                 if compact:
                     fc = cg.compact(cs[full])
-                    bc = cs[~full]
-                    cs = np.concatenate([fc, bc])
+                    cs = np.concatenate([fc, bnd])
                     full = np.concatenate(
-                        [np.ones(len(fc), dtype=bool), np.zeros(len(bc), dtype=bool)]
+                        [np.ones(len(fc), dtype=bool), np.zeros(len(bnd), dtype=bool)]
                     )
-                ids.extend([pid] * len(cs))
+                n = np.zeros(len(cs), dtype=np.int64)
+                n[~full] = np.diff(offs)
+                ids.append(np.full(len(cs), pid, dtype=np.int64))
                 cells.append(cs)
                 fulls.append(full)
-                if with_rings:
-                    # geometry is CLIPPED to each boundary cell before
-                    # packing (Sutherland-Hodgman to the cell box + epsilon):
-                    # a cover row carries only the handful of vertices that
-                    # cross its own cell, so Arrow transfer and PIP cost per
-                    # candidate are O(local boundary), independent of the
-                    # parcel's total vertex count. The epsilon expansion
-                    # keeps points that sit exactly ON a cell edge strictly
-                    # interior to the clip box (parity stays exact).
-                    bx0, by0, bx1, by1 = cg.cell_bounds(cs)
-                    rbb = geom.parts_bboxes(parts)  # once per parcel
-                    for j in range(len(cs)):
-                        if full[j]:
-                            rings.append(None)
-                        else:
-                            ex = (bx1[j] - bx0[j]) * 1e-9
-                            ey = (by1[j] - by0[j]) * 1e-9
-                            clipped = geom.clip_parts_to_box(
-                                parts,
-                                bx0[j] - ex, by0[j] - ey,
-                                bx1[j] + ex, by1[j] + ey,
-                                bboxes=rbb,
-                            )
-                            rings.append(geom.pack_polygons(clipped))
-            if cells:
-                out = {
-                    "parcel_id": np.asarray(ids, dtype=np.int64),
-                    "cell": np.concatenate(cells),
-                    "full": np.concatenate(fulls),
-                }
-                if with_rings:
-                    out["rings"] = pd.Series(rings, dtype=object)
-                yield pd.DataFrame(out)
+                lens.append(n)
+                values.append(vals)
+            if not cells:
+                continue
+            full = np.concatenate(fulls)
+            offsets = np.concatenate([[0], np.cumsum(np.concatenate(lens))])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(ids)),
+                    pa.array(np.concatenate(cells)),
+                    pa.array(full),
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets.astype(np.int32)),
+                        pa.array(np.concatenate(values)),
+                        mask=pa.array(full),
+                    ),
+                ],
+                names=["parcel_id", "cell", "full", "rings"],
+            )
 
-    schema = "parcel_id BIGINT, cell BIGINT, full BOOLEAN"
-    if with_rings:
-        schema += ", rings ARRAY<DOUBLE>"
     # spread polygons across tasks: the kernel is per-polygon numpy, so the
     # dimension-side fill parallelizes embarrassingly
     spark = parcels.sparkSession
@@ -132,7 +126,10 @@ def parcel_covers(
     return (
         parcels.select("parcel_id", "geom_wkt")
         .repartition(n_parts, "parcel_id")
-        .mapInPandas(_covers, schema)
+        .mapInArrow(
+            _covers,
+            "parcel_id BIGINT, cell BIGINT, full BOOLEAN, rings ARRAY<DOUBLE>",
+        )
     )
 
 
@@ -171,8 +168,7 @@ def spatial_join(
     move, so salting would only inflate the build side; the production
     entry query engages this decision path and provably keeps its plan)."""
     if covers is None:
-        covers = parcel_covers(parcels, res=res, compact=compact, with_rings=True)
-    has_rings = "rings" in covers.columns
+        covers = parcel_covers(parcels, res=res, compact=compact)
     if broadcast_cover:
         covers = F.broadcast(covers)
 
@@ -210,42 +206,34 @@ def spatial_join(
     # filter-refine fast path, single pass: candidates in fully-interior
     # cover cells are exact matches (no boundary can cross them); only
     # boundary-cell candidates run the vectorized PIP kernel. One boolean
-    # pandas UDF — the upstream join executes once (no branch-and-union
+    # arrow_udf — the upstream join executes once (no branch-and-union
     # recompute) and wide row payloads (urls, html) never cross the Arrow
-    # boundary. Geometry arrives as a per-row packed array (NULL on interior
-    # rows), so no driver materialization of the polygon dimension exists in
-    # this pipeline at any scale.
-    if not has_rings:
-        # covers supplied without geometry (e.g. narrow bucketed cover
-        # tables): attach it per boundary candidate via an equi-join on
-        # parcel_id with the `full` flag as an extra join predicate —
-        # interior rows keep NULL geometry, the dimension never hits the
-        # driver, and the join distributes on parcel_id.
-        geom_dim = pack_geometry(parcels)
-        if broadcast_cover:
-            geom_dim = F.broadcast(geom_dim)
-        cand = cand.join(
-            geom_dim,
-            (cand["parcel_id"] == geom_dim["_gpid"]) & (~cand["full"]),
-            "left",
-        ).drop("_gpid")
-
-    @F.pandas_udf(BooleanType())
+    # boundary. Geometry arrives as the cover's list<double> column (NULL on
+    # interior rows), read as one flat values buffer plus offsets — no
+    # per-row object is built, and no driver materialization of the polygon
+    # dimension exists in this pipeline at any scale.
+    @F.arrow_udf(BooleanType())
     def _keep(
-        plon: pd.Series, plat: pd.Series, pid: pd.Series, pcell: pd.Series,
-        full: pd.Series, rings: pd.Series,
-    ) -> pd.Series:
-        ok = full.to_numpy(dtype=bool).copy()
-        need = ~ok
+        plon: pa.Array, plat: pa.Array, pid: pa.Array, pcell: pa.Array,
+        full: pa.Array, rings: pa.Array,
+    ) -> pa.Array:
+        ok = np.array(full.to_numpy(zero_copy_only=False), dtype=bool)
+        offs = rings.offsets.to_numpy()
+        need = (
+            ~ok
+            & rings.is_valid().to_numpy(zero_copy_only=False)
+            & (offs[1:] > offs[:-1])
+        )
         if need.any():
             ok[need] = geom.points_in_packed_grouped(
-                plon.to_numpy()[need],
-                plat.to_numpy()[need],
-                pid.to_numpy()[need],
-                rings.to_numpy()[need],
-                pcell.to_numpy()[need],
+                plon.to_numpy(zero_copy_only=False)[need],
+                plat.to_numpy(zero_copy_only=False)[need],
+                pid.to_numpy(zero_copy_only=False)[need],
+                rings.values.to_numpy(zero_copy_only=False),
+                pcell.to_numpy(zero_copy_only=False)[need],
+                starts=offs[:-1][need],
             )
-        return pd.Series(ok)
+        return pa.array(ok)
 
     return cand.filter(
         _keep(
@@ -253,30 +241,6 @@ def spatial_join(
             F.col("full"), F.col("rings"),
         )
     ).drop("_cell", "full", "rings")
-
-
-def pack_geometry(parcels: DataFrame) -> DataFrame:
-    """(parcel_id, geom_wkt) -> (_gpid, rings packed array<double>) dimension
-    for attaching geometry to candidate rows executor-side."""
-
-    def _pack(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "_gpid": pdf["parcel_id"].astype("int64"),
-                    "rings": pd.Series(
-                        [
-                            geom.pack_polygons(geom.parse_wkt_polygons(w))
-                            for w in pdf["geom_wkt"]
-                        ],
-                        dtype=object,
-                    ),
-                }
-            )
-
-    return parcels.select("parcel_id", "geom_wkt").mapInPandas(
-        _pack, "_gpid BIGINT, rings ARRAY<DOUBLE>"
-    )
 
 
 def _knn_map_only(

@@ -60,18 +60,16 @@ def tile_cut(
             rows: list[tuple] = []
             for pid, wkt in zip(pdf[id_col], pdf[wkt_col]):
                 parts = geom.parse_wkt_polygons(wkt)
-                per_ring = [cg.polyfill_part(p_, res, classify=True) for p_ in parts]
-                cs = np.unique(np.concatenate([c for c, _ in per_ring]))
-                full = np.zeros(len(cs), dtype=bool)
-                for c, f in per_ring:
-                    full |= np.isin(cs, c[f])
-                for c, f in per_ring:
-                    full &= ~np.isin(cs, c[~f])
+                cs, full = cg.polyfill_parts(parts, res)
                 bx0, by0, bx1, by1 = cg.cell_bounds(cs)
                 ixs, iys, _ = cg.decode(cs)
-                rbb = geom.parts_bboxes(parts)
+                bnd = ~full
+                vals, offs = geom.clip_parts_to_boxes(
+                    parts, geom.parts_bboxes(parts),
+                    bx0[bnd], by0[bnd], bx1[bnd], by1[bnd],
+                )
+                k = np.cumsum(bnd) - 1  # cell -> its boundary-clip slot
                 for j in range(len(cs)):
-                    box_w = bx1[j] - bx0[j]
                     if full[j]:
                         ring = (
                             np.array([bx0[j], bx1[j], bx1[j], bx0[j]]),
@@ -79,17 +77,12 @@ def tile_cut(
                         )
                         clipped = [[ring]]
                     else:
-                        clipped = geom.clip_parts_to_box(
-                            parts, bx0[j], by0[j], bx1[j], by1[j], bboxes=rbb
+                        clipped = geom.unpack_polygons(
+                            vals[offs[k[j]]:offs[k[j] + 1]]
                         )
-                        clipped = [
-                            [r for r in rings if len(r[0]) >= 3]
-                            for rings in clipped
-                        ]
-                        clipped = [r for r in clipped if r]
                         if simplify_frac > 0.0:
                             clipped = geom.simplify_parts(
-                                clipped, simplify_frac * box_w
+                                clipped, simplify_frac * (bx1[j] - bx0[j])
                             )
                     if not clipped:
                         continue  # grazing cell: cover superset row with

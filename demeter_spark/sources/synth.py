@@ -348,8 +348,11 @@ def raster_tiles(spark: SparkSession, datasets: tuple[tuple[str, int, int], ...]
     # len(datasets) frames then totals ~defaultParallelism partitions
     # instead of len(datasets) x defaultParallelism micro-tasks (measured:
     # the 128-task version made every downstream cells stage
-    # scheduling-overhead-bound at ~576 rows/task)
-    n_part = max(1, spark.sparkContext.defaultParallelism // len(datasets))
+    # scheduling-overhead-bound at ~576 rows/task). At least 2 per frame:
+    # with one, a small host (local[4] or less) hands each frame to a single
+    # task and Spark plans grouped work over it without an Exchange, so plan
+    # shape would follow the host's core count
+    n_part = max(2, spark.sparkContext.defaultParallelism // len(datasets))
     frames = []
     for ds, dlo, dhi in datasets:
         frames.append(

@@ -237,3 +237,200 @@ def test_points_in_packed_grouped_flat_matches_looped_reference():
             inside |= part_in
         want[idx] = inside
     assert got.tolist() == want.tolist()
+
+    # the Arrow layout (flat values + start offsets) of the rows carrying
+    # geometry gives the same answers
+    has = np.flatnonzero([p is not None for p in packed])
+    lens = np.array([len(packed[i]) for i in has])
+    flat = np.concatenate([packed[i] for i in has])
+    starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+    got_arrow = geom.points_in_packed_grouped(
+        px[has], py[has], gid[has], flat, cell[has], starts=starts
+    )
+    assert got_arrow.tolist() == want[has].tolist()
+
+
+# --- batched cover clip ----------------------------------------------------
+# The per-cell clip loop that clip_parts_to_boxes replaced, kept verbatim as
+# the bit-identity reference (one ring, one box, four half-plane passes).
+
+
+def _ref_clip_halfplane(xs, ys, coord, bound, keep_le):
+    if len(xs) == 0:
+        return xs, ys
+    v = xs if coord == 0 else ys
+    inside = (v <= bound) if keep_le else (v >= bound)
+    nxt = np.arange(1, len(xs) + 1) % len(xs)
+    in_n = inside[nxt]
+    crossing = inside != in_n
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        t = np.where(crossing, (bound - v) / (v[nxt] - v), 0.0)
+    cx = xs + t * (xs[nxt] - xs)
+    cy = ys + t * (ys[nxt] - ys)
+    if coord == 0:
+        cx = np.where(crossing, bound, cx)
+    else:
+        cy = np.where(crossing, bound, cy)
+    counts = crossing.astype(np.int64) + in_n.astype(np.int64)
+    total = int(counts.sum())
+    if total == 0:
+        return np.empty(0), np.empty(0)
+    out_x = np.empty(total)
+    out_y = np.empty(total)
+    start = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    put_cross = start[crossing]
+    out_x[put_cross] = cx[crossing]
+    out_y[put_cross] = cy[crossing]
+    put_next = start[in_n] + crossing[in_n].astype(np.int64)
+    out_x[put_next] = xs[nxt][in_n]
+    out_y[put_next] = ys[nxt][in_n]
+    return out_x, out_y
+
+
+def _ref_clip_parts_to_box(parts, x0, y0, x1, y1, bboxes):
+    box = (np.array([x0, x1, x1, x0]), np.array([y0, y0, y1, y1]))
+    cx = np.array([(x0 + x1) * 0.5])
+    cy = np.array([(y0 + y1) * 0.5])
+    out = []
+    for pi, rings in enumerate(parts):
+        kept = []
+        for ri, (xs, ys) in enumerate(rings):
+            bx0, by0, bx1, by1 = bboxes[pi][ri]
+            if bx1 < x0 or bx0 > x1 or by1 < y0 or by0 > y1:
+                continue
+            may_contain = bx0 <= x0 and by0 <= y0 and bx1 >= x1 and by1 >= y1
+            c = (np.asarray(xs, dtype=np.float64), np.asarray(ys, dtype=np.float64))
+            for coord, bound, keep_le in (
+                (0, x1, True), (0, x0, False), (1, y1, True), (1, y0, False)
+            ):
+                c = _ref_clip_halfplane(c[0], c[1], coord, bound, keep_le)
+            if len(c[0]) >= 3:
+                kept.append(c)
+            elif may_contain and geom.points_in_ring(cx, cy, xs, ys)[0]:
+                kept.append(box)
+        if kept:
+            out.append(kept)
+    return out
+
+
+def _circle_wkt(cx, cy, r, n=128):
+    ang = np.linspace(0.0, 2.0 * np.pi, n + 1)[:-1]
+    xs = cx + r * np.cos(ang)
+    ys = cy + r * np.sin(ang)
+    pts = ", ".join(f"{x!r} {y!r}" for x, y in zip(xs, ys))
+    return f"POLYGON (({pts}, {xs[0]!r} {ys[0]!r}))"
+
+
+def _assert_boxes_bit_identical(parts, x0, y0, x1, y1):
+    values, offsets = geom.clip_parts_to_boxes(
+        parts, geom.parts_bboxes(parts), x0, y0, x1, y1
+    )
+    assert len(offsets) == len(x0) + 1 and offsets[-1] == len(values)
+    bbs = geom.parts_bboxes(parts)
+    for j in range(len(x0)):
+        want = geom.pack_polygons(
+            _ref_clip_parts_to_box(parts, x0[j], y0[j], x1[j], y1[j], bbs)
+        )
+        got = values[offsets[j]:offsets[j + 1]]
+        assert got.view(np.int64).tolist() == want.view(np.int64).tolist(), j
+
+
+@pytest.mark.parametrize("res", [7, 10, 12])
+def test_clip_parts_to_boxes_bit_identical_on_cover_cells(res):
+    """The batched clip reproduces the per-cell loop bit for bit on every
+    boundary cell of the cover (cells padded as the cover join pads them):
+    dense circles, a hole crossing cells, and a multipolygon with an island
+    inside a hole."""
+    from demeter_spark.functions import cellgrid as cg
+
+    wkts = [_circle_wkt(2.2 + 3.9 * j, 2.3 + 3.3 * (j % 3), 1.4) for j in range(4)]
+    wkts += [
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))",
+        "MULTIPOLYGON (((0 0, 8 0, 8 8, 0 8, 0 0), (2 2, 6 2, 6 6, 2 6, 2 2)), "
+        "((3 3, 5 3, 5 5, 3 5, 3 3)))",
+    ]
+    for wkt in wkts:
+        parts = geom.parse_wkt_polygons(wkt)
+        cells, full = cg.polyfill_parts(parts, res)
+        bx0, by0, bx1, by1 = cg.cell_bounds(cells[~full])
+        ex = (bx1 - bx0) * 1e-9
+        ey = (by1 - by0) * 1e-9
+        _assert_boxes_bit_identical(parts, bx0 - ex, by0 - ey, bx1 + ex, by1 + ey)
+
+
+def test_clip_parts_to_boxes_bit_identical_edge_boxes(monkeypatch):
+    """Hand-picked boxes: inside the outer ring, crossed by the hole, inside
+    the hole, grazing the outer edge and a corner, disjoint — plus an empty
+    box list, and the same boxes clipped one chunk per box."""
+    parts = geom.parse_wkt_polygons(
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))"
+    )
+    boxes = np.array([
+        (1.0, 1.0, 2.0, 2.0),    # inside the outer ring, clear of the hole
+        (3.5, 3.5, 5.0, 5.0),    # hole crosses the box
+        (4.5, 4.5, 5.5, 5.5),    # inside the hole
+        (10.0, 2.0, 11.0, 3.0),  # grazes the outer edge x = 10
+        (10.0, 10.0, 11.0, 11.0),  # touches a corner
+        (20.0, 20.0, 21.0, 21.0),  # disjoint
+    ])
+    _assert_boxes_bit_identical(parts, *boxes.T)
+    values, offsets = geom.clip_parts_to_boxes(
+        parts, geom.parts_bboxes(parts), *np.empty((4, 0))
+    )
+    assert len(values) == 0 and offsets.tolist() == [0]
+    monkeypatch.setattr(geom, "_CLIP_BATCH_VERTICES", 1)
+    _assert_boxes_bit_identical(parts, *boxes.T)
+
+
+def test_clip_parts_to_boxes_empty_clip_fallback(monkeypatch):
+    """A ring that clips to nothing is emitted as the box itself iff its
+    bbox contains the box and it contains the box centre (forced here: the
+    Sutherland-Hodgman passes never collapse a containing ring on finite
+    input, so the fallback is exercised by stubbing them out)."""
+    def collapse(xs, ys, off, x0, y0, x1, y1):
+        return np.empty(0), np.empty(0), np.zeros(len(off), dtype=np.int64)
+
+    monkeypatch.setattr(geom, "_clip_rings_to_boxes", collapse)
+    parts = geom.parse_wkt_polygons(
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))"
+    )
+    boxes = np.array([
+        (1.0, 1.0, 2.0, 2.0),    # outer only (hole bbox disjoint)
+        (4.5, 4.5, 5.5, 5.5),    # outer and hole
+        (5.0, 5.0, 7.0, 7.0),    # hole bbox does not contain the box
+        (20.0, 20.0, 21.0, 21.0),  # nothing
+    ])
+    values, offsets = geom.clip_parts_to_boxes(
+        parts, geom.parts_bboxes(parts), *boxes.T
+    )
+    got = [values[offsets[j]:offsets[j + 1]].tolist() for j in range(4)]
+
+    def box(x0, y0, x1, y1):
+        return [4.0, x0, x1, x1, x0, y0, y0, y1, y1]
+
+    assert got == [
+        [1.0, 1.0] + box(*boxes[0]),
+        [1.0, 2.0] + box(*boxes[1]) + box(*boxes[1]),
+        [1.0, 1.0] + box(*boxes[2]),
+        [0.0],
+    ]
+
+
+def test_clip_near_equal_ordinates_raise_no_warning():
+    """Non-crossing edges with near-equal ordinates used to overflow in the
+    intersection divide; only crossing edges divide now, and the output is
+    unchanged."""
+    import warnings
+
+    xs = np.array([0.0, 5e-324, 5e-324, 0.0])  # sub-ulp-wide rectangle
+    ys = np.array([0.0, 0.0, 1.0, 1.0])
+    want = _ref_clip_halfplane(xs, ys, 0, 1.0, True)
+    want = _ref_clip_halfplane(*want, 0, -1.0, False)
+    want = _ref_clip_halfplane(*want, 1, 0.5, True)
+    want = _ref_clip_halfplane(*want, 1, -1.0, False)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = geom.clip_ring_box(xs, ys, -1.0, -1.0, 1.0, 0.5)
+    assert len(got[0]) >= 3
+    for g, w in zip(got, want):
+        assert g.view(np.int64).tolist() == w.view(np.int64).tolist()

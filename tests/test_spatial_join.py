@@ -90,11 +90,39 @@ def test_no_driver_geometry_collect():
 
     from demeter_spark.operators import joins as joins_mod
 
-    for fn in (joins_mod.parcel_covers, joins_mod.spatial_join,
-               joins_mod.pack_geometry):
+    for fn in (joins_mod.parcel_covers, joins_mod.spatial_join):
         src = inspect.getsource(fn)
         assert ".collect()" not in src, fn.__name__
         assert "sparkContext.broadcast" not in src, fn.__name__
+
+
+def test_refine_edge_batches(spark):
+    """The Arrow refine on edge batches: candidates that are all in full
+    cover cells (the kernel never runs), an empty candidate set, and NULL
+    lon/lat (no cell, so never a candidate)."""
+    import numpy as np
+
+    from demeter_spark.functions import cellgrid as cg
+
+    parcels = spark.createDataFrame(
+        [(7, "POLYGON ((0 0, 40 0, 40 40, 0 40, 0 0))")],
+        "parcel_id long, geom_wkt string",
+    )
+    rows = [(i, 10.0 + i * 0.5, 12.0 + i * 0.25) for i in range(40)]
+    pts = spark.createDataFrame(
+        rows + [(100, None, 5.0), (101, 5.0, None), (102, None, None)],
+        "pid long, lon double, lat double",
+    )
+    covers = joins.parcel_covers(parcels, res=7).toPandas()
+    full = set(covers.loc[covers["full"], "cell"])
+    cells = cg.cell_of(np.array([r[1] for r in rows]), np.array([r[2] for r in rows]), 7)
+    assert set(cells.tolist()) <= full  # every candidate is a full-cell one
+
+    got = joins.spatial_join(pts, parcels, res=7).collect()
+    assert sorted((r["pid"], r["parcel_id"]) for r in got) == [(i, 7) for i in range(40)]
+
+    far = pts.selectExpr("pid", "lon + 100e0 AS lon", "lat")
+    assert joins.spatial_join(far, parcels, res=7).collect() == []
 
 
 def test_knn_ring_doubling_sparse(spark):
